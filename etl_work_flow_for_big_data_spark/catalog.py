@@ -278,8 +278,12 @@ def fan_out(df: DataFrame) -> DataFrame:
     Results are row-identical: every consumer is set-semantic, and a
     keyless repartition is retry-safe (local sort before round-robin,
     SPARK-23207). The partition probe plans ``df`` once — cheap for
-    the scan-shaped frames this wraps.
+    the scan-shaped frames this wraps. A streaming frame passes through
+    unchanged: it has no RDD to probe, and its micro-batches are
+    already split by the source.
     """
+    if df.isStreaming:
+        return df
     n = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < n:
         return df.repartition(n)

@@ -23,25 +23,39 @@ from pyspark.sql import DataFrame
 OperatorFn = Callable[..., DataFrame]
 
 
-class OperatorRegistry:
-    def __init__(self) -> None:
-        self._ops: dict[str, OperatorFn] = {}
+class Registry:
+    """Named plugins resolved at use time — the one lookup behind the
+    reference's protocol factory (``ProtocolFactory.cpp:78-118``) and
+    operator loader (``SOContainer.cpp:67-88``). ``kind`` names what
+    the registry holds in the unknown-name error."""
 
-    def register(self, name: str, fn: OperatorFn) -> None:
-        if name in self._ops:
-            raise ValueError(f"operator already registered: {name}")
-        self._ops[name] = fn
+    def __init__(self, kind: str) -> None:
+        self._kind = kind
+        self._items: dict[str, Callable[..., Any]] = {}
 
-    def get(self, name: str) -> OperatorFn:
+    def register(self, name: str, fn: Callable[..., Any]) -> None:
+        self._items[name] = fn
+
+    def get(self, name: str) -> Callable[..., Any]:
         try:
-            return self._ops[name]
+            return self._items[name]
         except KeyError:
             raise KeyError(
-                f"unknown operator {name!r}; registered: {sorted(self._ops)}"
+                f"unknown {self._kind} {name!r}; registered: {self.names()}"
             ) from None
 
     def names(self) -> list[str]:
-        return sorted(self._ops)
+        return sorted(self._items)
+
+
+class OperatorRegistry(Registry):
+    def __init__(self) -> None:
+        super().__init__("operator")
+
+    def register(self, name: str, fn: OperatorFn) -> None:
+        if name in self._items:
+            raise ValueError(f"operator already registered: {name}")
+        super().register(name, fn)
 
     def apply(self, name: str, df: DataFrame, params: dict[str, Any] | None = None) -> DataFrame:
         return self.get(name)(df, **(params or {}))

@@ -33,6 +33,18 @@ from etl_work_flow_for_big_data_spark.functions.vectors import (
 )
 
 
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """Shared top-k tail: keep the ``k`` best candidates per query by
+    ``cos_sim`` desc, ties broken on ``c_vec_id``, numbered from 1.
+    ``scored`` carries (q_vec_id, c_vec_id, cos_sim)."""
+    w = Window.partitionBy("q_vec_id").orderBy(F.desc("cos_sim"), "c_vec_id")
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("long"))
+        .filter(F.col("rank") <= k)
+        .select("q_vec_id", "rank", "c_vec_id", "cos_sim")
+    )
+
+
 def topk_cosine(
     queries: DataFrame,
     candidates: DataFrame,
@@ -55,16 +67,13 @@ def topk_cosine(
         for r in queries.select(id_col, vec_col).collect()
     ]
     scored = pairwise_cosine(candidates, id_col, vec_col, corpus, mode="all")
-    w = Window.partitionBy("q_vec_id").orderBy(F.desc("cos_sim"), "c_vec_id")
-    return (
+    return _rank_topk(
         scored.select(
             F.col("d2").alias("q_vec_id"),
             F.col("d1").alias("c_vec_id"),
             F.round("cos_raw", 6).alias("cos_sim"),
-        )
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("q_vec_id", "rank", "c_vec_id", "cos_sim")
+        ),
+        k,
     )
 
 
@@ -285,12 +294,7 @@ def ann_lsh_topk(
     scored = cand.withColumn(
         "cos_sim", F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6)
     )
-    w = Window.partitionBy("q_vec_id").orderBy(F.desc("cos_sim"), "c_vec_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("q_vec_id", "rank", "c_vec_id", "cos_sim")
-    )
+    return _rank_topk(scored, k)
 
 
 def ann_near_dup_pairs(
@@ -752,12 +756,7 @@ def ivf_topk(
         .filter(F.col("q_vec_id") != F.col("c_vec_id"))
         .withColumn("cos_sim", F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6))
     )
-    w = Window.partitionBy("q_vec_id").orderBy(F.desc("cos_sim"), "c_vec_id")
-    return (
-        pairs.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("q_vec_id", "rank", "c_vec_id", "cos_sim")
-    )
+    return _rank_topk(pairs, k)
 
 
 def ivf_build(
@@ -1048,9 +1047,4 @@ def ivf_query(
         .filter(F.col("q_vec_id") != F.col("c_vec_id"))
         .withColumn("cos_sim", F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6))
     )
-    w = Window.partitionBy("q_vec_id").orderBy(F.desc("cos_sim"), "c_vec_id")
-    return (
-        pairs.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("q_vec_id", "rank", "c_vec_id", "cos_sim")
-    )
+    return _rank_topk(pairs, k)

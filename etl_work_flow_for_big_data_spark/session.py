@@ -15,9 +15,7 @@ from pyspark.sql import SparkSession
 
 #: Static (pre-JVM) configs — only apply when WE create the session.
 _BUILDER_CONF = {
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
-    "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.serializer": "org.apache.spark.serializer.KryoSerializer",

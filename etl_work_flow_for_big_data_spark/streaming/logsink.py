@@ -20,6 +20,7 @@ from etl_work_flow_for_big_data_spark.functions.packets import (
     bitmask_admit,
     decode_level,
 )
+from etl_work_flow_for_big_data_spark.streaming.sinks import route_fanout_writer
 
 
 def build_log_packets(
@@ -50,14 +51,6 @@ def build_log_packets(
 
 def log_table_writer(base_dir: str):
     """foreachBatch sink: append admitted log packets to a parquet log
-    table partitioned by level letter (per-batch overwrite dirs for
-    replay idempotence, same ledger pattern as the routed sink)."""
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.write.mode("overwrite")
-            .partitionBy("l")
-            .parquet(f"{base_dir}/batch_id={batch_id}")
-        )
-
-    return write
+    table partitioned by level letter — the routed sink keyed on ``l``
+    (per-batch overwrite dirs for replay idempotence)."""
+    return route_fanout_writer(base_dir, "l")

@@ -19,18 +19,18 @@ from pyspark.sql import DataFrame
 
 
 def route_fanout_writer(
-    base_dir: str, route_col: str = "route", fmt: str = "parquet"
+    base_dir: str, route_col: str = "route"
 ) -> Callable[[DataFrame, int], None]:
-    """foreachBatch function: write each micro-batch under
-    ``base_dir/batch_id=N/route=<value>/``. Replays overwrite their own
-    batch directory → exactly-once output without a transactional sink."""
+    """foreachBatch function: write each micro-batch as parquet under
+    ``base_dir/batch_id=N/<route_col>=<value>/``. Replays overwrite their
+    own batch directory → exactly-once output without a transactional
+    sink."""
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         (
             batch_df.write.mode("overwrite")
             .partitionBy(route_col)
-            .format(fmt)
-            .save(f"{base_dir}/batch_id={batch_id}")
+            .parquet(f"{base_dir}/batch_id={batch_id}")
         )
 
     return write
@@ -42,13 +42,12 @@ def start_routed_stream(
     checkpoint_dir: str,
     route_col: str = "route",
     trigger_available_now: bool = True,
-    fmt: str = "parquet",
 ):
     """Start a streaming query that fans out by route with checkpointed
     exactly-once semantics (G2: checkpointLocation is the offset ledger,
     the per-batch overwrite is the output ledger)."""
     writer = (
-        df.writeStream.foreachBatch(route_fanout_writer(base_dir, route_col, fmt))
+        df.writeStream.foreachBatch(route_fanout_writer(base_dir, route_col))
         .option("checkpointLocation", checkpoint_dir)
     )
     if trigger_available_now:

@@ -628,10 +628,12 @@ def test_distributed_ntile_property_random_inputs(spark):
 # r15 re-baseline: queries whose heavy stage is wrapped in
 # catalog.fan_out (input-layout-adaptive repartition before the
 # tokenize/shingle/md5/kernel compute) gain exactly ONE round-robin
-# exchange at fixture scale, where every table is a single-split file
-# (sim_ivf_nprobe gains two — corpus assignment + query-rows kernel
-# passes). At >= cores input splits fan_out is a no-op and these
-# ceilings are loose by one.
+# exchange at fixture scale, where every table is a single-split file.
+# IVF assignment never fans out, at any corpus size: the
+# pairwise_cosine fan-out gate multiplies the broadcast side, and 16
+# centroids x 64 dims = 1024 < 16384 (static counts at sf0.001:
+# sim_ivf_topk 2, sim_ivf_nprobe 4). At >= cores input splits fan_out
+# is a no-op and these ceilings are loose by one.
 EXCHANGE_BUDGET = {
     "window_rank": 1,
     "agg_rollup": 1,

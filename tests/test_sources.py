@@ -43,6 +43,27 @@ def test_unknown_format_error(spark):
         DEFAULT.read(spark, "xml", "/nowhere")
 
 
+@pytest.mark.parametrize("fmt", ["avro", "jdbc"])
+def test_batch_only_formats_reject_read_stream(spark, fmt):
+    """avro and jdbc have no streaming reader: read_stream fails with
+    the registry's KeyError listing the formats that DO stream."""
+    with pytest.raises(KeyError) as exc:
+        DEFAULT.read_stream(spark, fmt, "/nowhere", None)
+    msg = exc.value.args[0]
+    assert msg.startswith(f"unknown streaming format {fmt!r}; registered: ")
+    listed = msg.split("registered: ", 1)[1]
+    for streamable in ("parquet", "csv", "json", "text", "orc", "kv_text", "kafka"):
+        assert repr(streamable) in listed
+    assert "'avro'" not in listed and "'jdbc'" not in listed
+
+
+@pytest.mark.parametrize("fmt", ["kv_text", "kafka"])
+def test_streamable_format_has_one_reader(fmt):
+    """One reader function per format: batch and stream resolve to the
+    same callable, which receives spark.read or spark.readStream."""
+    assert DEFAULT._batch.get(fmt) is DEFAULT._stream.get(fmt)
+
+
 def test_read_orc_roundtrip(spark, tmp_path):
     src = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
     src.write.mode("overwrite").orc(str(tmp_path / "o"))

@@ -766,3 +766,23 @@ def test_near_dedup_collision_check_is_mode_scoped(spark):
 
     with pytest.raises(ValueError, match="__simhash"):
         near_dedup_within_watermark(sim_col, "text", mode="exact")
+
+
+def test_fan_out_passes_streaming_frames_through(spark):
+    """catalog.fan_out probes the batch partition count, which a
+    streaming frame cannot answer outside writeStream.start(); it must
+    hand a stream back unchanged so the fan_out-wrapped operators
+    (decode_media & co.) still build on a stream."""
+    from etl_work_flow_for_big_data_spark.catalog import fan_out
+    from etl_work_flow_for_big_data_spark.multimodal.columns import decode_media
+
+    stream = spark.readStream.format("rate").option("rowsPerSecond", 1).load()
+    assert fan_out(stream) is stream
+    media = stream.select(
+        F.col("value").alias("doc_id"), F.lit(b"GIF89a").alias("content")
+    )
+    assert decode_media(media).isStreaming
+
+    # the batch branch is unchanged: a one-split scan still fans out
+    one = spark.range(4).coalesce(1)
+    assert fan_out(one).rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
