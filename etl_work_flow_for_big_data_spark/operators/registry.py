@@ -25,18 +25,22 @@ OperatorFn = Callable[..., DataFrame]
 
 class Registry:
     """Named plugins resolved at use time — the one lookup behind the
-    reference's protocol factory (``ProtocolFactory.cpp:78-118``) and
-    operator loader (``SOContainer.cpp:67-88``). ``kind`` names what
-    the registry holds in the unknown-name error."""
+    reference's protocol factory (``ProtocolFactory.cpp:78-118``),
+    operator loader (``SOContainer.cpp:67-88``) and session table
+    (the streaming ``PipelineManager``). ``kind`` names what the
+    registry holds in the unknown-name error."""
 
     def __init__(self, kind: str) -> None:
         self._kind = kind
-        self._items: dict[str, Callable[..., Any]] = {}
+        self._items: dict[str, Any] = {}
 
-    def register(self, name: str, fn: Callable[..., Any]) -> None:
+    def __contains__(self, name: str) -> bool:
+        return name in self._items
+
+    def register(self, name: str, fn: Any) -> None:
         self._items[name] = fn
 
-    def get(self, name: str) -> Callable[..., Any]:
+    def get(self, name: str) -> Any:
         try:
             return self._items[name]
         except KeyError:
@@ -53,7 +57,7 @@ class OperatorRegistry(Registry):
         super().__init__("operator")
 
     def register(self, name: str, fn: OperatorFn) -> None:
-        if name in self._items:
+        if name in self:
             raise ValueError(f"operator already registered: {name}")
         super().register(name, fn)
 

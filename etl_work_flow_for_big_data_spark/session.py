@@ -60,14 +60,34 @@ _RUNTIME_CONF = {
 }
 
 
-def tune_session(spark: SparkSession) -> SparkSession:
-    """Apply runtime confs to an existing session (driver-owned or ours)."""
-    for k, v in _RUNTIME_CONF.items():
+#: The runtime confs a parquet table read depends on: the two that fix
+#: how footer timestamps are typed, and the session zone the NTZ→
+#: TIMESTAMP cast uses. ``catalog.load_table`` sets only these, so a
+#: caller's shuffle, AQE and broadcast settings survive a table load.
+READ_CONF = (
+    "spark.sql.session.timeZone",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+
+def _apply(spark: SparkSession, keys) -> SparkSession:
+    for k in keys:
         try:
-            spark.conf.set(k, v)
+            spark.conf.set(k, _RUNTIME_CONF[k])
         except Exception:  # non-runtime conf on this build — skip
             pass
     return spark
+
+
+def tune_session(spark: SparkSession) -> SparkSession:
+    """Apply runtime confs to an existing session (driver-owned or ours)."""
+    return _apply(spark, _RUNTIME_CONF)
+
+
+def tune_reads(spark: SparkSession) -> SparkSession:
+    """Apply only the ``READ_CONF`` subset of the runtime confs."""
+    return _apply(spark, READ_CONF)
 
 
 def get_spark(app_name: str = "spark-graft", master: str | None = None) -> SparkSession:

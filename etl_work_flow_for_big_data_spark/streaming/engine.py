@@ -26,6 +26,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
+from etl_work_flow_for_big_data_spark.operators.registry import Registry
+
 QueryBuilder = Callable[[SparkSession], StreamingQuery]
 
 ACTION_START = "startsession"
@@ -34,7 +36,11 @@ ACTION_RESTART = "restartsession"
 
 
 @dataclass
-class _Registered:
+class Pipeline:
+    """One registered pipeline: its builder, the query it last started,
+    whether it should be running (the supervisor restarts it if so) and
+    how many times the supervisor restarted it."""
+
     builder: QueryBuilder
     query: StreamingQuery | None = None
     desired_running: bool = False
@@ -46,29 +52,27 @@ class PipelineManager:
 
     def __init__(self, spark: SparkSession) -> None:
         self._spark = spark
-        self._pipelines: dict[str, _Registered] = {}
+        self._pipelines = Registry("pipeline")
         self._lock = threading.RLock()
 
     def register(self, name: str, builder: QueryBuilder) -> None:
         with self._lock:
             if name in self._pipelines:
                 raise ValueError(f"pipeline already registered: {name}")
-            self._pipelines[name] = _Registered(builder=builder)
+            self._pipelines.register(name, Pipeline(builder=builder))
 
-    def _get(self, name: str) -> _Registered:
-        try:
-            return self._pipelines[name]
-        except KeyError:
-            raise KeyError(
-                f"unknown pipeline {name!r}; registered: {sorted(self._pipelines)}"
-            ) from None
+    def pipeline(self, name: str) -> Pipeline:
+        """The named pipeline's record; ``.query`` is its current
+        ``StreamingQuery`` (``None`` before the first start). Unknown
+        names raise the registry's ``KeyError``."""
+        return self._pipelines.get(name)
 
     # -- control verbs (G5) -------------------------------------------
     def start(self, name: str) -> bool:
         """Start a pipeline; no-op if already running (idempotent start,
         MFramework.cpp:1782-1787). Returns True if a start happened."""
         with self._lock:
-            reg = self._get(name)
+            reg = self.pipeline(name)
             if reg.query is not None and reg.query.isActive:
                 # still record intent: a restart whose old query outlived
                 # the stop timeout must stay supervised (the monitor
@@ -83,11 +87,11 @@ class PipelineManager:
         """Stop one pipeline, or all when name is None (the id-0
         broadcast, MFramework.cpp:1693-1726). Graceful: signals stop
         then awaits termination (G3)."""
-        names = [name] if name is not None else sorted(self._pipelines)
+        names = [name] if name is not None else self._pipelines.names()
         stopped = []
         for n in names:
             with self._lock:
-                reg = self._get(n)
+                reg = self.pipeline(n)
                 reg.desired_running = False
                 q = reg.query
             if q is not None and q.isActive:
@@ -98,7 +102,7 @@ class PipelineManager:
 
     def restart(self, name: str | None = None) -> list[str]:
         """stop + start (MFramework.cpp:1750-1754); broadcast on None."""
-        names = [name] if name is not None else sorted(self._pipelines)
+        names = [name] if name is not None else self._pipelines.names()
         for n in names:
             self.stop(n)
             self.start(n)
@@ -109,7 +113,7 @@ class PipelineManager:
         MFramework.cpp:1677-1754). name=None == session id 0."""
         if action == ACTION_START:
             if name is None:
-                for n in sorted(self._pipelines):
+                for n in self._pipelines.names():
                     self.start(n)
             else:
                 self.start(name)
@@ -184,7 +188,7 @@ class PipelineManager:
         Returns the names restarted."""
         restarted = []
         with self._lock:
-            items = list(self._pipelines.items())
+            items = self._records()
         for name, reg in items:
             if reg.desired_running and (reg.query is None or not reg.query.isActive):
                 with self._lock:
@@ -230,5 +234,8 @@ class PipelineManager:
                     "desired_running": r.desired_running,
                     "restarts": r.restarts,
                 }
-                for n, r in self._pipelines.items()
+                for n, r in self._records()
             }
+
+    def _records(self) -> list[tuple[str, Pipeline]]:
+        return [(n, self.pipeline(n)) for n in self._pipelines.names()]

@@ -59,7 +59,7 @@ def streaming_mediation(spark, work: str) -> None:
         ),
     )
     mgr.start("mediation")
-    mgr._pipelines["mediation"].query.awaitTermination(120)
+    mgr.pipeline("mediation").query.awaitTermination(120)
     mgr.stop(None)
 
     routed = spark.read.parquet(out).select("s", "f", "route")

@@ -8,6 +8,13 @@ Usage: python scripts/capture_plans.py <tag> <suffix> [query ...]
   suffix  e.g. before / after
   query   optional subset; default = all registered queries
 
+       python scripts/capture_plans.py --diff <tag_a> <tag_b>
+  compares the plan files of two captures (plans/<tag>/, or a directory
+  path), paired by file name, so capture both sides with one suffix.
+  Expression ids, lambda-variable counters, plan_id, object hashes,
+  temp-view hashes, RDD ids and temp-directory names are stripped first; any other difference, or a file
+  only one side has, is printed and the exit status is 1.
+
 Plan-only: builds each DataFrame and formats the physical plan without
 executing it (explain is driver-side), so this is safe to run while
 other jobs own the executors.
@@ -15,14 +22,26 @@ other jobs own the executors.
 
 from __future__ import annotations
 
+import difflib
 import os
 import re
 import sys
+import tempfile
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-from etl_work_flow_for_big_data_spark.queries import load_all  # noqa: E402
-from etl_work_flow_for_big_data_spark.session import get_spark  # noqa: E402
+#: Per-session noise in a formatted plan, and what it is replaced by.
+_NOISE = [
+    (re.compile(r"#\d+"), "#"),  # expression ids
+    (re.compile(r"(lambda \w+?)_\d+\b"), r"\1_"),  # lambda-variable counters
+    (re.compile(r"plan_id=\d+"), "plan_id="),
+    (re.compile(r"@[0-9a-f]{4,}\b"), "@"),  # object identity hashes
+    (re.compile(r"\b(\w+?_)[0-9a-f]{32}\b"), r"\1"),  # uuid-named temp views
+    (re.compile(r"RDD\[\d+\]"), "RDD[]"),  # RDD ids count the session's earlier RDDs
+    # mkdtemp directories (persisted indexes) get a random name per run
+    (re.compile(re.escape(tempfile.gettempdir()) + r"/[^/\]\s]+"), "<tmp>"),
+]
 
 
 def shape_summary(plan: str) -> str:
@@ -47,12 +66,47 @@ def shape_summary(plan: str) -> str:
     return " ".join(parts)
 
 
+def normalize(plan: str) -> str:
+    for pattern, repl in _NOISE:
+        plan = pattern.sub(repl, plan)
+    return plan
+
+
+def diff(tag_a: str, tag_b: str) -> int:
+    """Print every plan difference between two captures beyond
+    per-session noise; the number of differing plan files."""
+    dirs = [os.path.join(ROOT, "plans", t) for t in (tag_a, tag_b)]
+    files = [set(os.listdir(d)) for d in dirs]
+    names = sorted(files[0] | files[1])
+    differing = 0
+    for name in names:
+        if not all(name in f for f in files):
+            only = tag_a if name in files[0] else tag_b
+            print(f"{name}: only in {only}")
+            differing += 1
+            continue
+        texts = []
+        for d in dirs:
+            with open(os.path.join(d, name)) as f:
+                texts.append(normalize(f.read()).splitlines())
+        if texts[0] != texts[1]:
+            differing += 1
+            print(f"{name}: plans differ")
+            for line in difflib.unified_diff(*texts, tag_a, tag_b, lineterm="", n=1):
+                print("  " + line)
+    print(f"{len(names) - differing} of {len(names)} plans identical after normalization")
+    return differing
+
+
 def main() -> None:
+    if sys.argv[1] == "--diff":
+        sys.exit(1 if diff(sys.argv[2], sys.argv[3]) else 0)
+    from etl_work_flow_for_big_data_spark.queries import load_all
+    from etl_work_flow_for_big_data_spark.session import get_spark
+
     tag, suffix = sys.argv[1], sys.argv[2]
     names = sys.argv[3:]
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", tag
-    )
+    out_dir = os.path.join(ROOT, "plans", tag)
     os.makedirs(out_dir, exist_ok=True)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 

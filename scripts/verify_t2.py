@@ -19,8 +19,10 @@ N = int(sys.argv[1]) if len(sys.argv) > 1 else 50
 SF = os.environ.get("VERIFY_SF_DIR", "/root/testdata/sf0.01")
 # VERIFY_CORES=3 reproduces the low-partition sweep (local[3], 3
 # shuffle partitions) that shakes out plans whose correctness quietly
-# depends on partition count; note tune_session re-sets shuffle
-# partitions from SPARK_GRAFT_CPUS on every query, so both knobs move.
+# depends on partition count; note every registered query re-applies
+# tune_session (queries._tuned), which re-sets shuffle partitions from
+# SPARK_GRAFT_CPUS, so both knobs move. catalog.load_table itself sets
+# only the confs its parquet read depends on (session.READ_CONF).
 CORES = os.environ.get("VERIFY_CORES", "8")
 os.environ["SPARK_GRAFT_CPUS"] = CORES
 spark = (

@@ -15,11 +15,15 @@ directories keep the default zero-extra-I/O path.
 from __future__ import annotations
 
 import os
+import sys
+import threading
+import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from etl_work_flow_for_big_data_spark import catalog
 from etl_work_flow_for_big_data_spark.catalog import _drifted_schema, load_table
 
 
@@ -226,3 +230,139 @@ def test_hive_layout_inside_metadata_dir_is_ignored(tmp_path):
         "id": "bigint",
         "x": "string",
     }
+
+
+# -- schema resolved once per file set ----------------------------------
+
+
+def _jobs(spark, fn):
+    """``(fn(), number of Spark jobs fn ran)``, counted through a job
+    group on the status tracker."""
+    sc = spark.sparkContext
+    group = f"catalog-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job events reach the status tracker through the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _write_uniform(tmp_path, name="t"):
+    d = tmp_path / f"{name}.parquet"
+    d.mkdir()
+    for i in range(2):
+        pq.write_table(
+            pa.table({"id": pa.array([i], pa.int64()), "x": pa.array([f"v{i}"])}),
+            str(d / f"part-{i:03d}.parquet"),
+        )
+    return d
+
+
+def test_second_load_of_unchanged_table_runs_no_job(spark, tmp_path):
+    _write_uniform(tmp_path)
+    first, n_first = _jobs(spark, lambda: load_table(spark, str(tmp_path), "t"))
+    second, n_second = _jobs(spark, lambda: load_table(spark, str(tmp_path), "t"))
+    assert n_first >= 1  # the footer-inference job
+    assert n_second == 0
+    assert second.schema == first.schema
+    assert sorted(second.collect()) == sorted(first.collect())
+
+
+def test_table_load_keeps_callers_session_confs(spark, sf_dir):
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        load_table(spark, sf_dir, "events")
+        assert spark.conf.get(key) == "7"
+    finally:
+        spark.conf.set(key, saved)
+
+
+def test_new_file_with_new_column_is_visible_on_next_load(spark, tmp_path):
+    d = _write_uniform(tmp_path)
+    assert load_table(spark, str(tmp_path), "t").columns == ["id", "x"]
+    pq.write_table(
+        pa.table({"id": pa.array([7], pa.int64()), "x": pa.array(["v7"]),
+                  "score": pa.array([0.5])}),
+        str(d / "part-002.parquet"),
+    )
+    df = load_table(spark, str(tmp_path), "t")
+    assert df.columns == ["id", "x", "score"]
+    assert {r.id: r.score for r in df.collect()} == {0: None, 1: None, 7: 0.5}
+
+
+def test_rewritten_single_file_table_is_reinferred(spark, tmp_path):
+    f = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"id": pa.array([1], pa.int64())}), f)
+    assert load_table(spark, str(tmp_path), "t").columns == ["id"]
+    pq.write_table(pa.table({"id": pa.array([1], pa.int64()),
+                             "note": pa.array(["rewritten"])}), f)
+    assert load_table(spark, str(tmp_path), "t").columns == ["id", "note"]
+
+
+def test_drifted_directory_keeps_union_schema_when_memoised(spark, drifted_dir):
+    first, _ = _jobs(spark, lambda: load_table(spark, drifted_dir, "documents"))
+    second, n_second = _jobs(spark, lambda: load_table(spark, drifted_dir, "documents"))
+    assert n_second == 0
+    assert second.schema == first.schema
+    assert second.schema["doc_id"].dataType.simpleString() == "bigint"
+    assert sorted(second.collect()) == sorted(first.collect())
+
+
+def test_two_loads_of_one_table_self_join(spark, drifted_dir):
+    a = load_table(spark, drifted_dir, "documents")
+    b = load_table(spark, drifted_dir, "documents")
+    pairs = (
+        a.join(b, (a["lang"] == b["lang"]) & (a["doc_id"] < b["doc_id"]))
+        .select(a["doc_id"].alias("lo"), b["doc_id"].alias("hi"))
+        .collect()
+    )
+    assert sorted(tuple(r) for r in pairs) == [(0, 1), (0, 3), (1, 3)]
+
+
+def test_concurrent_loads_get_identical_schemas(spark, tmp_path):
+    _write_uniform(tmp_path)
+    n = 8  # more loaders than the session's cores
+    barrier = threading.Barrier(n)
+    schemas, errors = [], []
+
+    def load():
+        try:
+            barrier.wait(timeout=60)
+            schemas.append(load_table(spark, str(tmp_path), "t").schema)
+        except Exception as exc:  # noqa: BLE001 — reported below
+            errors.append(exc)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=load) for _ in range(n)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert len(schemas) == n and all(s == schemas[0] for s in schemas)
+    assert [k for k in catalog._SCHEMAS if k.startswith(str(tmp_path))] == [
+        f"{tmp_path}/t.parquet"
+    ]
+
+
+def test_unstatable_path_is_inferred_on_every_load(spark, tmp_path):
+    """A URI path cannot be stat-ed locally: no fingerprint, so each
+    load infers like an uncached read and nothing is kept."""
+    _write_uniform(tmp_path)
+    uri = f"file://{tmp_path}"
+    assert catalog._listing(f"{uri}/t.parquet") is None
+    for _ in range(2):
+        df, n = _jobs(spark, lambda: load_table(spark, uri, "t"))
+        assert n >= 1
+        assert sorted(r.id for r in df.collect()) == [0, 1]
+    assert f"{uri}/t.parquet" not in catalog._SCHEMAS

@@ -226,6 +226,15 @@ def test_control_plane_start_stop_restart(manager):
     assert not any(s["active"] for s in manager.status().values())
 
 
+def test_pipeline_accessor_resolves_through_the_registry(manager):
+    assert manager.pipeline("p1").query is None  # registered, never started
+    assert not manager.pipeline("p1").desired_running
+    with pytest.raises(KeyError, match=r"unknown pipeline 'nope'; registered: \['p1', 'p2'\]"):
+        manager.pipeline("nope")
+    with pytest.raises(ValueError, match="already registered"):
+        manager.register("p1", lambda s: None)
+
+
 def test_control_plane_errors(manager):
     with pytest.raises(KeyError, match="nope"):
         manager.start("nope")
@@ -237,7 +246,7 @@ def test_supervisor_restarts_dead_query(manager):
     manager.start("p1")
     # kill behind the manager's back (the monitor's dead-session case,
     # MFramework.cpp:1952-1964)
-    manager._pipelines["p1"].query.stop()
+    manager.pipeline("p1").query.stop()
     time.sleep(0.5)
     restarted = manager.check_once()
     assert restarted == ["p1"]
@@ -410,7 +419,7 @@ def test_supervisor_stop_race_not_resurrected(spark):
     mgr = PipelineManager(spark)
     built = []
     mgr.register("racer", lambda s: built.append(1))  # builder must not run
-    reg = mgr._pipelines["racer"]
+    reg = mgr.pipeline("racer")
     reg.desired_running = True  # registered as running, query dead (None)
 
     class FlipOnSecondAcquire:
